@@ -32,11 +32,11 @@ from dagger_spark.catalog import QUERIES, flagship  # noqa: E402
 # pure freshness + changed-code re-earning.  Priorities, in order:
 # (1) changed code re-earns its row — round 14 moved the literal-heavy
 # plan construction onto one-call array literals
-# (ops/similarity.lit_double_array / lit_int_array / lit_string_array:
+# (literals.lit_double_array / lit_int_array / lit_string_array:
 # LSH planes, IVF centroids, PQ codebook+norms, JL sign matrix, SQ8 grid,
 # classifier hashing weights, language-id profiles), memoized
-# RuleSpec.condition()/rules_metadata_df, and rewrote ops/rank._bucket as
-# one size(filter(...)) expression — every query whose plan embeds those
+# RuleSpec.condition() (rule metadata is now one literal array), and
+# rewrote ops/rank._bucket as one size(filter(...)) expression — every query whose plan embeds those
 # trees re-earns a driver row; (2) the STALEST rows by last-green round:
 # all 21 remaining round-8 rows (retiring that cohort; next-stalest is
 # round 9 with 47 rows queueing for future rounds).

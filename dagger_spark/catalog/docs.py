@@ -76,7 +76,8 @@ _DUCK_MINHASH_CTE = _duck_lsh_cte(3, 4, 4)
 # tokenized, shingled (k=3), md5'd, and min-folded ONCE per (session,
 # sf_dir); each operator derives its own band layout from the cached
 # signatures.  Single-slot memo: switching sf_dir unpersists the old stage
-# so test sessions touching many corpora don't accumulate storage.
+# so test sessions touching many corpora don't accumulate storage; a new
+# session (applicationId) simply rebuilds it.
 _DEDUP_STAGE: dict = {}
 
 
@@ -84,9 +85,12 @@ def _dedup_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ops.dedup import hashed_docs, minhash_signatures, shingled_docs
 
     key = (spark.sparkContext.applicationId, sf_dir)
-    if _DEDUP_STAGE.get("key") != key:
+    old_key = _DEDUP_STAGE.get("key")
+    if old_key != key:
         old = _DEDUP_STAGE.pop("df", None)
-        if old is not None:
+        # a stopped context's cache died with it, and unpersisting a
+        # DataFrame of that context raises: only release this app's stage
+        if old is not None and old_key[0] == key[0]:
             old.unpersist()
         docs = _load_wide(spark, sf_dir, "documents")
         _DEDUP_STAGE["key"] = key

@@ -373,7 +373,7 @@ def power_iteration_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.avg("x").alias("m"))
         .collect()
     )  # bounded: dim rows
-    from ..ops.similarity import lit_double_array
+    from ..literals import lit_double_array
 
     mu = [r["m"] for r in sorted(mu_rows, key=lambda r: r["j"])]
     mu_arr = lit_double_array(mu)

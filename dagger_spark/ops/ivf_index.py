@@ -92,11 +92,11 @@ from .manifest import (
     read_manifest,
     stream_watermark,
 )
+from ..literals import lit_double_array
 from .similarity import (
     _cell_of_from_centroids,
     _centroid_literals,
     cosine_from_norms,
-    lit_double_array,
     norm,
     sq8_quantize,
 )
@@ -393,7 +393,7 @@ def _grid_literals(spark: SparkSession, idx: str) -> tuple:
         (r["j"], r["mn"], r["mx"])
         for r in spark.read.parquet(os.path.join(idx, "grid.parquet")).collect()
     )  # bounded: one row per embedding dimension
-    # one-py4j-call literals (similarity.lit_double_array): the element-wise
+    # one-py4j-call literals (literals.lit_double_array): the element-wise
     # F.lit(list) path cost a driver round trip per grid cell
     mn_arr = lit_double_array([r[1] for r in rows])
     mx_arr = lit_double_array([r[2] for r in rows])

@@ -121,7 +121,7 @@ def boundaries_for(
         *[(F.col(c) if isinstance(c, str) else c).alias(f"_gk_{k}")
           for k, c in keys.items()]
     ).agg(
-        # pcts as ONE array literal (similarity.lit_double_array): the
+        # pcts as ONE array literal (literals.lit_double_array): the
         # bare-list form re-ships one lit per percentile through py4j
         *[F.percentile_approx(f"_gk_{k}", _lit_pcts(pcts), 10_000).alias(k)
           for k in keys]
@@ -134,7 +134,7 @@ def boundaries_for(
 
 
 def _lit_pcts(pcts: list) -> Column:
-    from .similarity import lit_double_array
+    from ..literals import lit_double_array
 
     return lit_double_array(pcts)
 
@@ -153,7 +153,7 @@ def _bucket(key: Column, boundaries: list) -> Column:
     boundary types keep the per-element chain."""
     if not boundaries:
         return F.lit(0).cast("int")
-    from .similarity import _render_lit_array
+    from ..literals import render_double_array
 
     if all(isinstance(v, int) and not isinstance(v, bool) for v in boundaries):
         arr = F.expr(
@@ -161,7 +161,7 @@ def _bucket(key: Column, boundaries: list) -> Column:
         )
     elif all(isinstance(v, (int, float)) and not isinstance(v, bool)
              for v in boundaries):
-        arr = F.expr(_render_lit_array([float(v) for v in boundaries]))
+        arr = F.expr(render_double_array([float(v) for v in boundaries]))
     else:  # non-numeric key types: the original chain
         b = F.lit(0)
         for v in boundaries:

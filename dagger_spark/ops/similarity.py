@@ -25,96 +25,16 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..literals import lit_double_array, lit_int_array
+
 #: single-slot memo for PQ codeword norms (see pq_topk): the plan-time
 #: norms job runs once per (session, codebook), not once per call
 _PQ_NORM_MEMO: dict = {}
-
-
-# ---------------------------------------------------------------------------
-# plan-time literal arrays in ONE JVM round trip
-# ---------------------------------------------------------------------------
-# PySpark's ``F.lit(list)`` recurses element-wise (``array(*[lit(x) ...])``),
-# costing one py4j round trip PER ELEMENT — for the literal-heavy ANN plans
-# (a 16x64 centroid matrix, 8x16x8 PQ codebook, 16x64 JL sign matrix) that
-# is thousands of driver round trips PER QUERY CONSTRUCTION, and profiling
-# showed it dominating wall time (guide §4: the Python boundary exists on
-# the driver too — cProfile: ~5 s/run of ann_recall inside py4j
-# send_command).  Rendering the array as ONE ``F.expr`` string moves the
-# whole literal across the boundary in a single call; the parser yields the
-# same CreateArray-of-Literals tree, constant-folding collapses both forms
-# to the identical Literal, so plans and results are bit-equal.
-#
-# Exactness: ``repr(float)`` is the shortest round-tripping decimal, and
-# Java's ``Double.parseDouble`` is correctly rounded, so text -> double
-# reproduces the exact bits ``F.lit`` would have shipped.  Only finite
-# values are legal (asserted); callers here never build empty arrays.
-
-
-def _fmt_double(v: float) -> str:
-    v = float(v)
-    assert math.isfinite(v), f"non-finite literal {v!r}"
-    return repr(v) + "D"
-
-
-def _render_lit_array(values) -> str:
-    if isinstance(values, (list, tuple)):
-        return "array(" + ",".join(_render_lit_array(v) for v in values) + ")"
-    return _fmt_double(values)
-
-
-def lit_double_array(values) -> Column:
-    """array<double> (arbitrarily nested) literal in one py4j call —
-    bit-identical to the element-wise ``F.lit`` construction (see module
-    comment above).  ``DAGGER_FASTLIT=0`` falls back to the element-wise
-    path (measurement kill switch)."""
-    if os.environ.get("DAGGER_FASTLIT") == "0":
-        return F.lit([_as_floats(v) for v in values]) if isinstance(
-            values[0], (list, tuple)
-        ) else F.lit([float(v) for v in values])
-    return F.expr(_render_lit_array(list(values)))
-
-
-def _as_floats(v):
-    if isinstance(v, (list, tuple)):
-        return [_as_floats(x) for x in v]
-    return float(v)
-
-
-def lit_int_array(values) -> Column:
-    """array<int> literal in one py4j call (same rationale as
-    :func:`lit_double_array`; int32 range asserted so the parsed element
-    type matches what per-element ``F.lit(int)`` produced)."""
-    vals = [int(v) for v in values]
-    assert all(-(2**31) <= v < 2**31 for v in vals), "int32 range"
-    if os.environ.get("DAGGER_FASTLIT") == "0":
-        return F.lit(vals)
-    return F.expr("array(" + ",".join(str(v) for v in vals) + ")")
-
-
-def _fmt_string(s: str) -> str:
-    """Spark SQL single-quoted string literal: backslashes doubled FIRST,
-    then quotes escaped — the parser's escape handling inverts exactly
-    this encoding for arbitrary text (pinned by test_fastlit's round-trip
-    over quotes/backslashes/newlines/unicode)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def lit_string_array(values) -> Column:
-    """array<string> literal in one py4j call (same rationale as
-    :func:`lit_double_array`).  A value containing ``${`` falls back to
-    the element-wise path: ``F.expr`` text passes through Spark's
-    variable substitutor, which would rewrite ``${...}`` spans (pinned by
-    test_fastlit's round-trip test)."""
-    vals = [str(v) for v in values]
-    if os.environ.get("DAGGER_FASTLIT") == "0" or any("${" in v for v in vals):
-        return F.lit(vals)
-    return F.expr("array(" + ",".join(_fmt_string(v) for v in vals) + ")")
 
 
 def dot(a: Column, b: Column) -> Column:

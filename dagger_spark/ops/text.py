@@ -162,7 +162,7 @@ def language_id_ngram(text: Column) -> Column:
 def language_id_ngram_from_trigrams(tg: Column) -> Column:
     """``language_id_ngram`` over a pre-staged distinct-trigram column
     (stage with ``df.select(char_trigrams(text).alias("tg"))``)."""
-    from .similarity import lit_string_array
+    from ..literals import lit_string_array
 
     scores = [
         (code, F.size(F.array_intersect(tg, lit_string_array(list(grams)))))
@@ -227,10 +227,10 @@ def hashing_trick_logit(grams: Column, weights: list) -> Column:
     expression — higher-order lambdas re-evaluate non-attribute children per
     element (see ``bind``).  The weight array is a plan-time Literal, so the
     lookup is O(1) codegen per element; the whole op is zero-shuffle.
-    The literal ships in ONE JVM call (similarity.lit_int_array) — the
+    The literal ships in ONE JVM call (literals.lit_int_array) — the
     element-wise ``F.lit(list)`` path cost 1024 py4j round trips per
     classifier build (round-14 driver-boundary sweep)."""
-    from .similarity import lit_int_array
+    from ..literals import lit_int_array
 
     w = lit_int_array(weights)
     return F.aggregate(

@@ -1,10 +1,9 @@
-from .spec import RuleSpec, alert_projection, rules_metadata_df
+from .spec import RuleSpec, alert_projection
 from .engine import apply_rules, apply_rules_single_pass, apply_rules_union
 
 __all__ = [
     "RuleSpec",
     "alert_projection",
-    "rules_metadata_df",
     "apply_rules",
     "apply_rules_single_pass",
     "apply_rules_union",

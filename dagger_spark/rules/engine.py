@@ -11,23 +11,24 @@ Two physical strategies, identical results (tested):
 * ``apply_rules_single_pass`` — the 100 TB strategy.  ONE scan evaluates all
   predicates per event via an array of ``CASE WHEN``s, explodes the matching
   rule ids (usually 0-1 per event, so the explode does not amplify the data),
-  and broadcast-joins the tiny rule-metadata dimension to enrich.  No shuffle,
-  no second scan, whole-stage codegen fuses every predicate into one pass.
-  This is what the statement set's "share one scan across 17 INSERTs" becomes
-  when re-thought Spark-first.
+  and enriches each hit by indexing one literal array of per-rule metadata
+  structs with its rule id.  No join, no shuffle, no second scan: the whole
+  plan is one Spark job, and whole-stage codegen fuses every predicate into
+  one pass.  This is what the statement set's "share one scan across 17
+  INSERTs" becomes when re-thought Spark-first.
 
 Both work unchanged on batch DataFrames and on Structured Streaming
-DataFrames (the broadcast join is stream-static, supported in append mode).
+DataFrames (plain projections, so any output mode).
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spec import RuleSpec, alert_projection, rules_metadata_df
+from .spec import RuleSpec, alert_projection, rule_metadata_sql
 
 
 def _enabled(rules: Sequence[RuleSpec], include_disabled: bool) -> list:
@@ -59,45 +60,48 @@ def apply_rules_single_pass(
     rules: Sequence[RuleSpec],
     ts_col: str = "timestamp",
     include_disabled: bool = False,
-    spark: Optional[SparkSession] = None,
 ) -> DataFrame:
-    """Single-scan composition: evaluate all predicates per event, emit
-    matching rule ids, broadcast-join metadata.  Scales to thousands of rules
-    with one pass over the data and zero shuffles."""
+    """Single-scan composition: evaluate all predicates per event, explode
+    the matching rule ids, and look up each hit's metadata with
+    ``element_at(<meta>, rule_id + 1)``.  ``<meta>`` is one array literal of
+    ``named_struct(module, threat, rule)`` per active rule, shipped in ONE
+    ``F.expr`` call.  Unlike a join against a metadata DataFrame it adds no
+    broadcast job to every (streaming micro-)batch.  Scales to thousands of
+    rules with one pass over the data and zero shuffles."""
     active = [r for r in _enabled(rules, include_disabled) if r.timeframe_seconds is None]
     if not active:
         raise ValueError("no enabled stateless rules")
-    spark = spark or events.sparkSession
 
-    # rule_id must index into the SAME list the metadata df is built from
+    # rule_id must index into the SAME list the metadata array is built from
     matches = F.array_compact(
         F.array(*[F.when(r.condition(), F.lit(i)) for i, r in enumerate(active)])
     )
+    meta = F.expr("array(" + ",".join(rule_metadata_sql(r) for r in active) + ")")
     ts = F.col(ts_col)
-    hits = (
-        events.select(
-            F.col("computer_name"),
-            F.col("host"),
-            F.col("uuid"),
-            ts.alias("__ts"),
-            F.explode(matches).alias("rule_id"),
-        )
+    hits = events.select(
+        F.col("computer_name"),
+        F.col("host"),
+        F.col("uuid"),
+        ts.alias("__ts"),
+        F.explode(matches).alias("rule_id"),
+    ).select(
+        "computer_name", "host", "uuid", "__ts",
+        F.element_at(meta, F.col("rule_id") + 1).alias("__meta"),
     )
-    meta = F.broadcast(rules_metadata_df(spark, active))
-    return hits.join(meta, "rule_id").select(
+    return hits.select(
         F.col("computer_name"),
         F.col("host"),
         F.struct(
             F.lit("signal").alias("kind"),
-            F.col("module"),
+            F.col("__meta.module").alias("module"),
             F.array(F.col("uuid")).alias("origin_ids"),
             F.lit(1).cast("long").alias("count"),
             F.col("__ts").alias("start"),
             F.col("__ts").alias("end"),
             F.col("__ts").alias("time"),
         ).alias("event"),
-        F.col("threat"),
-        F.col("rule"),
+        F.col("__meta.threat").alias("threat"),
+        F.col("__meta.rule").alias("rule"),
     )
 
 

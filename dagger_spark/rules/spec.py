@@ -14,15 +14,12 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..expr import Pred, parse_predicate, to_column
+from ..literals import fmt_string, render_string_array
 
 #: per-SparkContext memo for RuleSpec.condition() Columns (see docstring)
 _COND_MEMO: dict = {}
-
-#: per-SparkContext memo for rules_metadata_df (see its docstring)
-_META_MEMO: dict = {}
 
 
 @dataclass(frozen=True)
@@ -98,31 +95,45 @@ class RuleSpec:
         return replace(self, enabled=enabled)
 
 
-def _arr(values: Sequence[str]) -> Column:
-    if not values:
-        return F.array().cast(T.ArrayType(T.StringType()))
-    return F.array(*[F.lit(v) for v in values])
+def _threat_sql(rule: RuleSpec) -> str:
+    return (
+        f"named_struct('tactic', {render_string_array(rule.tactic)}, "
+        f"'technique', {render_string_array(rule.technique)}, "
+        f"'subtechnique', {render_string_array(rule.subtechnique)})"
+    )
+
+
+def _rule_sql(rule: RuleSpec) -> str:
+    return (
+        f"named_struct('name', {fmt_string(rule.name)}, "
+        f"'author', {fmt_string(rule.author)}, "
+        f"'category', {fmt_string(rule.category)}, "
+        f"'severity', {int(rule.severity)}, "
+        f"'description', {fmt_string(rule.description)}, "
+        f"'reference', {render_string_array(rule.references)}, "
+        f"'version', {fmt_string(rule.version)}, "
+        f"'source', {fmt_string(rule.source)})"
+    )
+
+
+def rule_metadata_sql(rule: RuleSpec) -> str:
+    """One rule's alert metadata as Spark SQL text:
+    ``named_struct(module, threat, rule)`` — the single renderer behind
+    :func:`threat_struct`, :func:`rule_struct` and the single-pass
+    engine's metadata array.  Built through one ``F.expr`` (one py4j call)
+    instead of one ``F.lit`` per field and tag."""
+    return (
+        f"named_struct('module', {fmt_string(rule.module)}, "
+        f"'threat', {_threat_sql(rule)}, 'rule', {_rule_sql(rule)})"
+    )
 
 
 def threat_struct(rule: RuleSpec) -> Column:
-    return F.struct(
-        _arr(rule.tactic).alias("tactic"),
-        _arr(rule.technique).alias("technique"),
-        _arr(rule.subtechnique).alias("subtechnique"),
-    )
+    return F.expr(_threat_sql(rule))
 
 
 def rule_struct(rule: RuleSpec) -> Column:
-    return F.struct(
-        F.lit(rule.name).alias("name"),
-        F.lit(rule.author).alias("author"),
-        F.lit(rule.category).alias("category"),
-        F.lit(rule.severity).cast("int").alias("severity"),
-        F.lit(rule.description).alias("description"),
-        _arr(rule.references).alias("reference"),
-        F.lit(rule.version).alias("version"),
-        F.lit(rule.source).alias("source"),
-    )
+    return F.expr(_rule_sql(rule))
 
 
 def alert_projection(rule: RuleSpec, ts_col: str = "timestamp") -> list:
@@ -144,87 +155,6 @@ def alert_projection(rule: RuleSpec, ts_col: str = "timestamp") -> list:
         threat_struct(rule).alias("threat"),
         rule_struct(rule).alias("rule"),
     ]
-
-
-def rules_metadata_df(spark: SparkSession, rules: Sequence[RuleSpec]) -> DataFrame:
-    """Rule metadata as a small dimension DataFrame keyed by rule_id (the
-    index into ``rules``).  Broadcast-joined by the single-pass engine so the
-    per-event hot path only materializes matching rule ids.
-
-    MEMOIZED per (SparkContext, rule tuple) like RuleSpec.condition():
-    RuleSpec is a frozen (hashable) dataclass and rule_id is the tuple
-    index, so an identical rule list yields a byte-identical dimension —
-    re-running createDataFrame per engine call only re-shipped the same
-    25 rows through py4j."""
-    sc = spark.sparkContext
-    ctx = id(sc._jsc)
-    if _META_MEMO.get("ctx") != ctx:
-        _META_MEMO.clear()
-        _META_MEMO["ctx"] = ctx
-        _META_MEMO["dfs"] = {}
-    dfs = _META_MEMO["dfs"]
-    key = tuple(rules)
-    cached = dfs.get(key)
-    if cached is not None:
-        return cached
-    out = _rules_metadata_df_uncached(spark, rules)
-    dfs[key] = out
-    return out
-
-
-def _rules_metadata_df_uncached(
-    spark: SparkSession, rules: Sequence[RuleSpec]
-) -> DataFrame:
-    schema = T.StructType(
-        [
-            T.StructField("rule_id", T.IntegerType(), False),
-            T.StructField("module", T.StringType(), True),
-            T.StructField(
-                "threat",
-                T.StructType(
-                    [
-                        T.StructField("tactic", T.ArrayType(T.StringType())),
-                        T.StructField("technique", T.ArrayType(T.StringType())),
-                        T.StructField("subtechnique", T.ArrayType(T.StringType())),
-                    ]
-                ),
-            ),
-            T.StructField(
-                "rule",
-                T.StructType(
-                    [
-                        T.StructField("name", T.StringType(), False),
-                        T.StructField("author", T.StringType()),
-                        T.StructField("category", T.StringType()),
-                        T.StructField("severity", T.IntegerType()),
-                        T.StructField("description", T.StringType()),
-                        T.StructField("reference", T.ArrayType(T.StringType())),
-                        T.StructField("version", T.StringType()),
-                        T.StructField("source", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    rows = [
-        (
-            i,
-            r.module,
-            (list(r.tactic), list(r.technique), list(r.subtechnique)),
-            (
-                r.name,
-                r.author,
-                r.category,
-                r.severity,
-                r.description,
-                list(r.references),
-                r.version,
-                r.source,
-            ),
-        )
-        for i, r in enumerate(rules)
-    ]
-    return spark.createDataFrame(rows, schema)
 
 
 def mitre_coverage(spark: SparkSession, rules: Sequence[RuleSpec]) -> DataFrame:

@@ -96,7 +96,7 @@ class MappedRule:
         if name == "predicate_sql":
             # fail LOUDLY: delegating would hand back the UNMAPPED field
             # paths, silently contradicting .predicate for any consumer
-            # that re-parses the SQL text (rules_metadata_df etc.)
+            # that re-parses the SQL text
             raise AttributeError(
                 "MappedRule deliberately has no predicate_sql: the mapped "
                 "IR (.predicate) is the source of truth; re-render from it "

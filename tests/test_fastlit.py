@@ -1,5 +1,6 @@
 """Round-14 internals pin: the one-py4j-call literal arrays
-(ops/similarity.lit_double_array / lit_int_array) must be BIT-identical —
+(dagger_spark/literals.lit_double_array / lit_int_array / lit_string_array)
+must be BIT-identical —
 values and schema — to the element-wise F.lit construction they replaced.
 
 The element-wise path (pyspark's own ``lit(list)`` recursion) costs one
@@ -16,12 +17,12 @@ import math
 import os
 import struct
 
-from dagger_spark.ops.similarity import (
-    _plane_coeffs,
+from dagger_spark.literals import (
     lit_double_array,
     lit_int_array,
-    rp_signs,
+    lit_string_array,
 )
+from dagger_spark.ops.similarity import _plane_coeffs, rp_signs
 
 
 def _bits(x):
@@ -76,12 +77,11 @@ def test_int_array_type_and_value_parity(spark):
 
 
 def test_string_array_escape_round_trip(spark):
-    from dagger_spark.ops.similarity import lit_string_array
-
     vals = [
         "plain", "it's", 'say "hi"', "back\\slash", "two\\\\", r"mix\'q",
         "tab\there", "new\nline", "semi;colon--", "unié中",
         "pct%_", "", "'", "\\", "a,b", ")(", "${x}",
+        "${env:HOME}", "${spark.app.name}",
     ]
     fast, slow = _both(spark, lambda: lit_string_array(vals))
     assert str(fast.schema) == str(slow.schema)

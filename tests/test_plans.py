@@ -39,8 +39,10 @@ def test_stateless_rules_plan_has_no_shuffle(spark, sysmon_df):
     plan = _plan(apply_rules_single_pass(sysmon_df, active_rules()))
     assert "Exchange hashpartitioning" not in plan
     assert "Exchange rangepartitioning" not in plan
-    # the only join is the broadcast against rule metadata
-    assert "BroadcastHashJoin" in plan
+    # metadata is a literal array indexed by rule id: no join, and no
+    # broadcast (a second Spark job in every streaming micro-batch)
+    assert "Join" not in plan
+    assert "BroadcastExchange" not in plan
 
 
 def test_rules_scan_prunes_event_data_fields(spark, sysmon_df):

@@ -56,6 +56,33 @@ def test_retire_clusters_equals_reduced_recompute(spark):
     assert all(d % 10 != _RETIRE_MOD for d in ids)
 
 
+def test_dedup_stage_survives_session_restart():
+    """The shared minhash stage is memoized per applicationId: after a
+    session restart the next call rebuilds it instead of unpersisting the
+    dead context's DataFrame (which raised).  Runs in its own process so
+    stopping the SparkContext leaves the suite's session alone."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from dagger_spark.catalog.docs import _dedup_stage\n"
+        "from dagger_spark.session import get_spark\n"
+        "for i in range(2):\n"
+        "    s = get_spark(f'restart{i}', master='local[1]', shuffle_partitions=1)\n"
+        f"    print('rows', _dedup_stage(s, {SF!r}).count())\n"
+        "    s.stop()\n"
+    )
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEMORY="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=300, env=env, cwd=repo,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    counts = [l.split()[1] for l in r.stdout.splitlines() if l.startswith("rows ")]
+    assert len(counts) == 2 and counts[0] == counts[1] and int(counts[0]) > 0
+
+
 def test_append_clusters_equals_full_recompute(spark):
     """Cluster admission: state-without-delta + affected-component merge
     must equal from-scratch clustering of the FULL corpus (Spark-side

@@ -47,6 +47,39 @@ def test_stateless_stream_equals_batch(spark, sysmon_path, tmp_path):
     assert len(stream_rows) > 0
 
 
+def test_stateless_stream_runs_one_job_per_micro_batch(spark, sysmon_path, tmp_path):
+    """The single-pass engine adds no Spark job of its own: every data
+    micro-batch is exactly one job (the sink's), so per-batch fixed cost
+    stays one job's worth.  Deterministic gauge — a join against a metadata
+    DataFrame shows up here as a second (broadcast) job per batch."""
+    from dagger_spark.sources.kafka import kafka_alert_payload
+
+    src = tmp_path / "jobs_src"
+    spark.read.parquet(sysmon_path).repartition(3).write.parquet(str(src))
+    n_files = len(list(src.glob("part-*.parquet")))
+
+    events = file_stream_events(spark, str(src), max_files_per_trigger=1)
+    q = (
+        build_alert_stream(events, active_rules())
+        .writeStream.format("memory").queryName("jobs_alerts")
+        .option("checkpointLocation", str(tmp_path / "jobs_ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data_batches) == n_files
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == len(data_batches)
+
+    def payloads(df):
+        return sorted(r.value for r in kafka_alert_payload(df).collect())
+
+    batch = apply_rules_single_pass(spark.read.parquet(sysmon_path), active_rules())
+    assert payloads(spark.table("jobs_alerts")) == payloads(batch)
+
+
 def _tf_rule():
     return compile_sigma({
         "title": "Burst", "author": "t", "description": "d", "level": "high",
