@@ -34,8 +34,8 @@ from dagger_spark.catalog import QUERIES, flagship  # noqa: E402
 # plan construction onto one-call array literals
 # (literals.lit_double_array / lit_int_array / lit_string_array:
 # LSH planes, IVF centroids, PQ codebook+norms, JL sign matrix, SQ8 grid,
-# classifier hashing weights, language-id profiles), memoized
-# RuleSpec.condition() (rule metadata is now one literal array), and
+# classifier hashing weights, language-id profiles), rule predicates as
+# one F.expr of Spark SQL text each (rule metadata is one literal array), and
 # rewrote ops/rank._bucket as one size(filter(...)) expression — every query whose plan embeds those
 # trees re-earns a driver row; (2) the STALEST rows by last-green round:
 # all 21 remaining round-8 rows (retiring that cohort; next-stalest is

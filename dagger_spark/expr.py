@@ -4,27 +4,29 @@ The reference expresses every detection as a SQL WHERE clause built from a
 small closed algebra (see /root/reference/sigma-transf/main.py:34-143 and the
 predicates in /root/reference/rules/sigma/*.sql): string equality, IN lists,
 IS NULL, LIKE prefix/suffix/substring, SIMILAR TO regexes, and arbitrary
-AND/OR/NOT nesting.  We model that algebra as a tiny immutable IR which can be
-rendered three ways:
+AND/OR/NOT nesting.  We model that algebra as a tiny immutable IR with one
+renderer and one parser:
 
-  * ``to_column``  -> a PySpark ``Column`` (JVM-side, whole-stage-codegen
-    friendly; the hot path — no Python UDFs anywhere),
-  * ``to_sql``     -> ANSI SQL text for the DuckDB differential oracle
-    (and optionally Spark SQL text),
+  * ``to_sql``     -> SQL text: dialect ``'spark'`` is what every rule runs
+    as (``RuleSpec.condition_sql()``, one ``F.expr`` per rule or rule set —
+    Dagger's own design is Sigma compiled to SQL text), dialect
+    ``'duckdb'`` is the differential oracle,
   * ``parse_predicate`` <- a restricted SQL predicate parser so rules can be
     stored/reviewed as plain SQL strings.
 
 Semantics notes (parity with the reference, verified by tests):
-  * SQL three-valued logic comes for free: Spark ``Column`` and DuckDB both
-    treat ``NOT (NULL LIKE ..)`` as NULL which a WHERE filters out.
+  * SQL three-valued logic comes for free: Spark and DuckDB both treat
+    ``NOT (NULL LIKE ..)`` as NULL which a WHERE filters out.
   * ``LIKE`` is full-string with ``%``/``_`` wildcards; patterns that reduce
     to contains/starts/endswith are classified at parse time so the Spark
     plan uses the specialized (codegen-friendly) predicates.
   * ``SIMILAR TO`` is full-string regex per the SQL standard; patterns not
     self-anchored are wrapped in ``^(?:..)$`` (SURVEY.md §2.3-F8).
   * backslashes are treated as LITERAL characters in LIKE needles (Flink has
-    no default LIKE escape); we never round-trip needles through SQL-literal
-    parsing on the Spark side — they go straight into ``Column`` ops.
+    no default LIKE escape).  Spark-dialect string literals are rendered by
+    ``literals.fmt_string``, whose escaping (backslash, quote, ``$``) the
+    Spark parser inverts exactly, so needles and regexes reach the JVM
+    byte-for-byte and ``${...}`` never meets the variable substitutor.
 """
 
 from __future__ import annotations
@@ -32,11 +34,9 @@ from __future__ import annotations
 import math
 import re
 from dataclasses import dataclass
-from decimal import Decimal as _Decimal
-from typing import Callable, Iterable, Optional, Sequence, Union
+from typing import Iterable
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from .literals import fmt_double, fmt_string
 
 # --------------------------------------------------------------------------
 # IR nodes
@@ -216,105 +216,6 @@ def anchor_regex(pattern: str) -> str:
 
 
 # --------------------------------------------------------------------------
-# Render: Spark Column  (the hot path)
-# --------------------------------------------------------------------------
-
-
-def _col(field: str) -> Column:
-    return F.col(field)
-
-
-def to_column(pred: Pred, case_insensitive: bool = False) -> Column:
-    """Render the IR as a PySpark ``Column`` (pure built-ins; codegen-friendly)."""
-    ci = case_insensitive
-
-    def go(p: Pred) -> Column:
-        if isinstance(p, And):
-            out = go(p.children[0])
-            for c in p.children[1:]:
-                out = out & go(c)
-            return out
-        if isinstance(p, Or):
-            out = go(p.children[0])
-            for c in p.children[1:]:
-                out = out | go(c)
-            return out
-        if isinstance(p, Not):
-            return ~go(p.child)
-        assert isinstance(p, Leaf)
-        col = _col(p.field)
-        op, v = p.op, p.value
-        lci = ci and not p.cased  # |cased leaves opt out of rule-wide CI
-        is_str = isinstance(v, str)
-        if lci and is_str and op in ("eq", "ne", "contains", "startswith", "endswith"):
-            col, v = F.lower(col), v.lower()
-        if op == "eq":
-            return col == F.lit(v)
-        if op == "ne":
-            return col != F.lit(v)
-        if op == "eq_field":
-            other = _col(v)
-            if lci:
-                return F.lower(col) == F.lower(other)
-            return col == other
-        if op in ("lt", "le", "gt", "ge"):
-            # Numeric comparison semantics are pinned ENGINE-AGNOSTICALLY
-            # for NUMERIC literals: the field TRY_CASTs to DOUBLE (NULL for
-            # non-numeric text -> no match).  Without it Spark would
-            # implicitly coerce a string column (and ANSI mode, the Spark 4
-            # default, THROWS on bad input) while DuckDB refuses
-            # VARCHAR-vs-number outright — a divergence, not a preference.
-            # STRING literals keep plain lexical comparison (identical
-            # collation-free semantics in both engines).
-            if isinstance(v, str):
-                cnum, vnum = col, F.lit(v)
-            elif isinstance(v, int) and not isinstance(v, bool) and abs(v) < 10 ** 29:
-                # Integer literals compare in DECIMAL(38,9): exact for any
-                # int64 (DOUBLE silently loses integers past 2^53) while
-                # still matching fractional text like '3.5' identically in
-                # both engines.  BIGINT would diverge: DuckDB TRY_CAST
-                # rounds '3.5'->4 where Spark try_cast yields NULL.  The
-                # literal ships as a python Decimal: F.lit on a plain int
-                # past 2^63 throws NumberFormatException (no JVM long),
-                # while a Decimal literal carries the full 29 digits.
-                cnum, vnum = col.try_cast("decimal(38,9)"), F.lit(_Decimal(v))
-            else:
-                cnum, vnum = col.try_cast("double"), F.lit(float(v))
-            if op == "lt":
-                return cnum < vnum
-            if op == "le":
-                return cnum <= vnum
-            if op == "gt":
-                return cnum > vnum
-            return cnum >= vnum
-        if op == "in":
-            # one flag drives BOTH sides (mirrors to_sql's lower_all): a
-            # mixed-type list must not lower the column while leaving the
-            # values un-lowered, which would silently never match.
-            lower_all = lci and bool(v) and all(isinstance(x, str) for x in v)
-            vals = [x.lower() for x in v] if lower_all else list(v)
-            if lower_all:
-                col = F.lower(_col(p.field))
-            return col.isin(vals)
-        if op == "is_null":
-            return col.isNull()
-        if op == "contains":
-            return col.contains(F.lit(v))
-        if op == "startswith":
-            return col.startswith(F.lit(v))
-        if op == "endswith":
-            return col.endswith(F.lit(v))
-        if op == "like":
-            pat = like_to_regex(v)
-            return col.rlike("(?i)" + pat if lci else pat)
-        if op == "regex":
-            return col.rlike("(?i)" + v if lci else v)
-        raise AssertionError(op)
-
-    return go(pred)
-
-
-# --------------------------------------------------------------------------
 # Render: SQL text (DuckDB oracle / Spark SQL)
 # --------------------------------------------------------------------------
 
@@ -332,13 +233,18 @@ def _field_sql(field: str, dialect: str) -> str:
 
 
 def _lit_sql(v: object, dialect: str) -> str:
-    if isinstance(v, str):
-        if dialect == "spark":
-            # default Spark parser treats backslash as an escape inside literals
-            return _q(v).replace("\\", "\\\\")
-        return _q(v)
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
+    if dialect == "spark":
+        # backslash, quote and ``$`` escaped (``F.expr`` text passes the
+        # variable substitutor); floats carry the ``D`` suffix so they parse
+        # as DOUBLE, not DECIMAL
+        if isinstance(v, str):
+            return fmt_string(v)
+        if isinstance(v, float):
+            return fmt_double(v)
+    if isinstance(v, str):
+        return _q(v)
     return str(v)
 
 
@@ -381,14 +287,22 @@ def to_sql(pred: Pred, dialect: str = "duckdb", case_insensitive: bool = False) 
             b = _field_sql(v, dialect)
             return f"({a} = lower({b}))" if lci else f"({a} = {b})"
         if op in ("lt", "le", "gt", "ge"):
-            # mirror to_column: numeric literals TRY_CAST the field to
-            # DOUBLE (NULL -> no match); string literals compare lexically
+            # Numeric comparison semantics are pinned ENGINE-AGNOSTICALLY
+            # for NUMERIC literals: the field TRY_CASTs (NULL for
+            # non-numeric text -> no match).  Without it Spark would
+            # implicitly coerce a string column (and ANSI mode THROWS on
+            # bad input) while DuckDB refuses VARCHAR-vs-number outright.
+            # Integer literals compare in DECIMAL(38,9): exact for any
+            # int64 (DOUBLE loses integers past 2^53) while matching
+            # fractional text like '3.5' identically in both engines
+            # (BIGINT would diverge: DuckDB rounds '3.5'->4, Spark yields
+            # NULL).  STRING literals keep plain lexical comparison.
             sym = {"lt": "<", "le": "<=", "gt": ">", "ge": ">="}[op]
             if isinstance(v, str):
                 return f"({f} {sym} {lit(v, low)})"
             if isinstance(v, int) and not isinstance(v, bool) and abs(v) < 10 ** 29:
                 return f"(TRY_CAST({f} AS DECIMAL(38,9)) {sym} {v})"
-            return f"(TRY_CAST({f} AS DOUBLE) {sym} {float(v)!r})"
+            return f"(TRY_CAST({f} AS DOUBLE) {sym} {_lit_sql(float(v), dialect)})"
         if op == "in":
             lower_all = lci and all(isinstance(x, str) for x in v)
             f2 = fld(p, lower_all)

@@ -16,15 +16,13 @@ Java's ``Double.parseDouble`` is correctly rounded, so text -> double
 reproduces the exact bits ``F.lit`` would have shipped.  Only finite
 doubles are legal (asserted).
 
-Shared by ``ops/`` (ANN, text, rank) and ``rules/`` (the rule-metadata
-struct literals).  ``DAGGER_FASTLIT=0`` selects the element-wise path for
-the array helpers (the parity tests' reference construction).
+Shared by ``ops/`` (ANN, text, rank), ``rules/`` (the rule-metadata
+struct literals) and ``expr.to_sql``'s Spark dialect (rule predicates).
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -70,17 +68,7 @@ def lit_double_array(values) -> Column:
     """array<double> (arbitrarily nested) literal in one py4j call —
     bit-identical to the element-wise ``F.lit`` construction (see module
     docstring)."""
-    if os.environ.get("DAGGER_FASTLIT") == "0":
-        return F.lit([_as_floats(v) for v in values]) if isinstance(
-            values[0], (list, tuple)
-        ) else F.lit([float(v) for v in values])
     return F.expr(render_double_array(list(values)))
-
-
-def _as_floats(v):
-    if isinstance(v, (list, tuple)):
-        return [_as_floats(x) for x in v]
-    return float(v)
 
 
 def lit_int_array(values) -> Column:
@@ -89,15 +77,10 @@ def lit_int_array(values) -> Column:
     type matches what per-element ``F.lit(int)`` produced)."""
     vals = [int(v) for v in values]
     assert all(-(2**31) <= v < 2**31 for v in vals), "int32 range"
-    if os.environ.get("DAGGER_FASTLIT") == "0":
-        return F.lit(vals)
     return F.expr("array(" + ",".join(str(v) for v in vals) + ")")
 
 
 def lit_string_array(values) -> Column:
     """array<string> literal in one py4j call (same rationale as
     :func:`lit_double_array`; ``$`` is safe, see :func:`fmt_string`)."""
-    vals = [str(v) for v in values]
-    if os.environ.get("DAGGER_FASTLIT") == "0":
-        return F.lit(vals)
-    return F.expr(render_string_array(vals))
+    return F.expr(render_string_array([str(v) for v in values]))

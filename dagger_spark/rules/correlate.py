@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ops.asof import interval_join
+from .spec import match_ids
 
 
 def rule_matches(
@@ -98,14 +99,13 @@ def correlate_alerts_stream(
     of trap the correlation count types fix inside their aggregates."""
 
     def _tagged_side(rule, side_key, entity_alias, uuid_alias, ts_alias):
-        tag = F.array_compact(F.array(F.when(rule.condition(), F.lit(1))))
         return (
             events.withWatermark(ts_col, watermark)
             .select(
                 F.col(side_key).alias(entity_alias),
                 F.col("uuid").alias(uuid_alias),
                 F.col(ts_col).alias(ts_alias),
-                F.explode(tag).alias("__m"),
+                F.explode(match_ids([rule])).alias("__m"),
             )
             .drop("__m")
         )

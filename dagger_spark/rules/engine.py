@@ -28,7 +28,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spec import RuleSpec, alert_projection, rule_metadata_sql
+from .spec import RuleSpec, alert_projection, match_ids, rule_metadata_sql
 
 
 def _enabled(rules: Sequence[RuleSpec], include_disabled: bool) -> list:
@@ -73,9 +73,7 @@ def apply_rules_single_pass(
         raise ValueError("no enabled stateless rules")
 
     # rule_id must index into the SAME list the metadata array is built from
-    matches = F.array_compact(
-        F.array(*[F.when(r.condition(), F.lit(i)) for i, r in enumerate(active)])
-    )
+    matches = match_ids(active)
     meta = F.expr("array(" + ",".join(rule_metadata_sql(r) for r in active) + ")")
     ts = F.col(ts_col)
     hits = events.select(

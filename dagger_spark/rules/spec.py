@@ -15,11 +15,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..expr import Pred, parse_predicate, to_column
+from ..expr import Pred, parse_predicate, to_sql
 from ..literals import fmt_string, render_string_array
-
-#: per-SparkContext memo for RuleSpec.condition() Columns (see docstring)
-_COND_MEMO: dict = {}
 
 
 @dataclass(frozen=True)
@@ -63,33 +60,15 @@ class RuleSpec:
     def predicate(self) -> Pred:
         return parse_predicate(self.predicate_sql)
 
-    def condition(self) -> Column:
-        """The predicate as a PySpark Column — MEMOIZED per (SparkContext,
-        predicate text, case flag).  Column objects are immutable
-        unresolved expression wrappers, safe to embed in any number of
-        batch or streaming plans; rebuilding the 25-rule tree through
-        py4j cost ~2-3 s of driver wall per engine call (round-14
-        profiling: ~5.4k py4j round trips per apply_rules_single_pass
-        build — guide §4, the Python boundary exists on the driver too).
-        Keyed on the live JVM context so a restarted session (tests) can
-        never see a Column from a dead gateway."""
-        from pyspark import SparkContext
+    def condition_sql(self) -> str:
+        """The predicate as Spark SQL text — the one Spark renderer of the
+        IR, as Dagger compiles Sigma to SQL text (sigma-transf/main.py)."""
+        return to_sql(self.predicate, "spark", self.case_insensitive)
 
-        sc = SparkContext._active_spark_context
-        ctx = id(sc._jsc) if sc is not None else None
-        if _COND_MEMO.get("ctx") != ctx:
-            _COND_MEMO.clear()
-            _COND_MEMO["ctx"] = ctx
-            _COND_MEMO["cols"] = {}
-        cols = _COND_MEMO["cols"]
-        key = (self.predicate_sql, self.case_insensitive)
-        col = cols.get(key)
-        if col is None:
-            col = to_column(
-                self.predicate, case_insensitive=self.case_insensitive
-            )
-            cols[key] = col
-        return col
+    def condition(self) -> Column:
+        """The predicate as a Column: :meth:`condition_sql` through one
+        ``F.expr`` (a fixed few py4j calls, however large the predicate)."""
+        return F.expr(self.condition_sql())
 
     def with_enabled(self, enabled: bool) -> "RuleSpec":
         return replace(self, enabled=enabled)
@@ -125,6 +104,21 @@ def rule_metadata_sql(rule: RuleSpec) -> str:
     return (
         f"named_struct('module', {fmt_string(rule.module)}, "
         f"'threat', {_threat_sql(rule)}, 'rule', {_rule_sql(rule)})"
+    )
+
+
+def match_ids(rules: Sequence) -> Column:
+    """The positions in ``rules`` of the rules an event matches, as
+    ``array_compact(array(CASE WHEN <sql_i> THEN i END, ...))`` built with
+    one ``F.expr``.  Exploding it tags each event once per matching rule
+    (usually 0 or 1 rows out)."""
+    return F.expr(
+        "array_compact(array("
+        + ",".join(
+            f"CASE WHEN {r.condition_sql()} THEN {i} END"
+            for i, r in enumerate(rules)
+        )
+        + "))"
     )
 
 

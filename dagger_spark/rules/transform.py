@@ -14,8 +14,8 @@ This module does the transform at the RIGHT altitude: the predicate IR.  A
 mapping is plain data ``{source_path: target_path}``; :func:`map_fields`
 rewrites every ``Leaf.field`` (and the right-hand side of ``eq_field``
 references — same rule as the linter) and returns a new immutable tree, so
-every downstream renderer (``to_column``, both ``to_sql`` dialects) and the
-schema linter see mapped paths with zero string surgery on SQL text.
+every downstream renderer (both ``to_sql`` dialects) and the schema linter
+see mapped paths with zero string surgery on SQL text.
 
 :data:`SYSMON_TO_ECS` ships the mapping for every field the 31 reference
 rules read, following what Winlogbeat's Sysmon module actually publishes:
@@ -30,8 +30,9 @@ from __future__ import annotations
 from typing import Dict, Iterable, Sequence
 
 from pyspark.sql import Column
+from pyspark.sql import functions as F
 
-from ..expr import And, Leaf, Not, Or, Pred, to_column
+from ..expr import And, Leaf, Not, Or, Pred, to_sql
 
 SYSMON_TO_ECS: Dict[str, str] = {
     "event_id": "winlog.event_id",
@@ -79,9 +80,9 @@ def map_fields(pred: Pred, mapping: Dict[str, str]) -> Pred:
 class MappedRule:
     """A rule transported onto another telemetry schema: same metadata,
     mapped predicate.  Duck-types RuleSpec everywhere the engine, the
-    alert projection, and the linter look — ``condition()`` and
-    ``.predicate`` come from the mapped tree, every other attribute
-    delegates to the base rule.  (A new ``predicate_sql`` TEXT is
+    alert projection, and the linter look — ``condition_sql()``,
+    ``condition()`` and ``.predicate`` come from the mapped tree, every
+    other attribute delegates to the base rule.  (A new ``predicate_sql`` TEXT is
     deliberately NOT synthesized: the IR is the source of truth, and
     re-rendering into the restricted grammar would re-open every
     LIKE-escaping trap the extractor already closed once.)"""
@@ -108,11 +109,12 @@ class MappedRule:
     def predicate(self) -> Pred:
         return object.__getattribute__(self, "_pred")
 
-    def condition(self) -> Column:
+    def condition_sql(self) -> str:
         base = object.__getattribute__(self, "_base")
-        return to_column(
-            self.predicate, case_insensitive=base.case_insensitive
-        )
+        return to_sql(self.predicate, "spark", base.case_insensitive)
+
+    def condition(self) -> Column:
+        return F.expr(self.condition_sql())
 
     def __repr__(self) -> str:
         base = object.__getattribute__(self, "_base")

@@ -58,6 +58,7 @@ from typing import Callable, Dict, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..rules.spec import match_ids
 from .compiler import SigmaCompileError, _parse_timeframe
 
 _TYPES = ("event_count", "value_count", "temporal", "temporal_ordered")
@@ -583,18 +584,10 @@ def compile_correlation(
         # the minimum over branches and a rule that never fired stalled
         # every window forever; a generator cannot be pushed below the
         # watermark, so here every event's timestamp advances it.
-        tag_arr = F.array_compact(
-            F.array(
-                *[
-                    F.when(r.condition(), F.lit(i))
-                    for i, r in enumerate(base_rules)
-                ]
-            )
-        )
         tagged = _wm(events).select(
             *[F.col(c) for c in spec.group_by],
             F.col(ts_col).alias("__ts"),
-            F.explode(tag_arr).alias("__rule"),
+            F.explode(match_ids(base_rules)).alias("__rule"),
         )
         w = F.window(F.col("__ts"), span)
         if events.isStreaming:

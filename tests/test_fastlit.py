@@ -9,13 +9,14 @@ plan-construction wall for the literal-heavy ANN family (a 16x64 centroid
 matrix is ~1k round trips per query build).  The replacement renders the
 array as ONE ``F.expr`` string; ``repr(float)`` round-trips exactly
 through Java's correctly-rounded ``Double.parseDouble``, so the parsed
-literals carry the same bits.  ``DAGGER_FASTLIT=0`` selects the old path
-(the measurement kill switch the round-14 A/B used).
+literals carry the same bits.  The reference is built here with ``F.lit``
+directly.
 """
 
 import math
-import os
 import struct
+
+from pyspark.sql import functions as F
 
 from dagger_spark.literals import (
     lit_double_array,
@@ -31,14 +32,19 @@ def _bits(x):
     return struct.pack("<d", x).hex()
 
 
-def _both(spark, builder):
-    fast = spark.range(1).select(builder().alias("v"))
-    os.environ["DAGGER_FASTLIT"] = "0"
-    try:
-        slow = spark.range(1).select(builder().alias("v"))
-    finally:
-        os.environ.pop("DAGGER_FASTLIT", None)
-    return fast, slow
+def _floats(v):
+    if isinstance(v, (list, tuple)):
+        return [_floats(x) for x in v]
+    return float(v)
+
+
+def _both(spark, fast, ref):
+    """``fast``: a one-call literal Column; ``ref``: the Python value the
+    element-wise ``F.lit`` reference is built from."""
+    return (
+        spark.range(1).select(fast.alias("v")),
+        spark.range(1).select(F.lit(ref).alias("v")),
+    )
 
 
 def test_double_array_bit_parity(spark):
@@ -47,7 +53,7 @@ def test_double_array_bit_parity(spark):
         + [math.sqrt(sum(x * x for x in _plane_coeffs(1, 64)))]
         + [0.0, -0.0, 1e-17, 123456789.123456789, 2.5e-308]
     )
-    fast, slow = _both(spark, lambda: lit_double_array(vals))
+    fast, slow = _both(spark, lit_double_array(vals), _floats(vals))
     assert str(fast.schema) == str(slow.schema)
     f = [float(x) for x in fast.head()["v"]]
     s = [float(x) for x in slow.head()["v"]]
@@ -58,7 +64,7 @@ def test_nested_double_array_bit_parity(spark):
     mat = [_plane_coeffs(p, 8) for p in range(4)]
     cube = [[rp_signs(j, 4) for j in range(3)] for _ in range(2)]
     for payload in (mat, cube):
-        fast, slow = _both(spark, lambda: lit_double_array(payload))
+        fast, slow = _both(spark, lit_double_array(payload), _floats(payload))
         assert str(fast.schema) == str(slow.schema)
 
         def unpack(v):
@@ -71,7 +77,7 @@ def test_nested_double_array_bit_parity(spark):
 
 def test_int_array_type_and_value_parity(spark):
     vals = [0, 1, 15, 2**31 - 1, -5]
-    fast, slow = _both(spark, lambda: lit_int_array(vals))
+    fast, slow = _both(spark, lit_int_array(vals), vals)
     assert str(fast.schema) == str(slow.schema)  # array<int>, not bigint
     assert list(fast.head()["v"]) == list(slow.head()["v"]) == vals
 
@@ -83,6 +89,6 @@ def test_string_array_escape_round_trip(spark):
         "pct%_", "", "'", "\\", "a,b", ")(", "${x}",
         "${env:HOME}", "${spark.app.name}",
     ]
-    fast, slow = _both(spark, lambda: lit_string_array(vals))
+    fast, slow = _both(spark, lit_string_array(vals), vals)
     assert str(fast.schema) == str(slow.schema)
     assert list(fast.head()["v"]) == list(slow.head()["v"]) == vals

@@ -1,7 +1,7 @@
 """Property-based differential testing of the predicate IR: random predicate
 trees over adversarial string data (backslashes, wildcards chars, quotes,
-unicode, nulls) must produce IDENTICAL row sets in Spark and DuckDB through
-the two renderers.  This is the generic form of the per-rule oracle tests —
+unicode, ``$``/``${...}``, nulls) must produce IDENTICAL row sets in Spark and
+DuckDB through the two ``to_sql`` dialects.  This is the generic form of the per-rule oracle tests —
 SURVEY.md §5.5."""
 
 import duckdb
@@ -9,12 +9,14 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from dagger_spark.expr import And, Leaf, Not, Or, java_safe_regex, to_column, to_sql
+from pyspark.sql import functions as F
+
+from dagger_spark.expr import And, Leaf, Not, Or, java_safe_regex, to_sql
 
 VALUES = [
     "abc", "ABC", "a%c", "a_c", "a\\c", "C:\\Windows\\System32\\lsass.exe",
     "it's", "0x1FFFFF", "0x1fffff", "", " ", "müller", "a|b(c)", "*\\cmd.exe",
-    "null", "UNKNOWN(0000)", "%x%",
+    "null", "UNKNOWN(0000)", "%x%", "${env:HOME}", "${spark.app.name}", "a$b",
 ]
 REGEXES = ["^a", "c$", "a.c", "[0-9]+", "^(?:abc|ABC)$", "x{2,3}", "\\|", "^$"]
 FIELDS = ["a", "b"]
@@ -74,7 +76,7 @@ def prop_data(spark, tmp_path_factory):
 @given(pred=pred_st)
 def test_spark_and_duckdb_agree(prop_data, pred):
     df, con = prop_data
-    got = {r.id for r in df.filter(to_column(pred)).select("id").collect()}
+    got = {r.id for r in df.filter(F.expr(to_sql(pred, "spark"))).select("id").collect()}
     sql = to_sql(pred, "duckdb")
     want = {r[0] for r in con.execute(f"SELECT id FROM t WHERE {sql}").fetchall()}
     assert got == want, f"pred={pred}\nsql={sql}"
@@ -85,7 +87,8 @@ def test_spark_and_duckdb_agree(prop_data, pred):
 @given(pred=pred_st)
 def test_case_insensitive_render_agrees(prop_data, pred):
     df, con = prop_data
-    got = {r.id for r in df.filter(to_column(pred, case_insensitive=True)).select("id").collect()}
+    spark_sql = to_sql(pred, "spark", case_insensitive=True)
+    got = {r.id for r in df.filter(F.expr(spark_sql)).select("id").collect()}
     sql = to_sql(pred, "duckdb", case_insensitive=True)
     want = {r[0] for r in con.execute(f"SELECT id FROM t WHERE {sql}").fetchall()}
     assert got == want, f"pred={pred}\nsql={sql}"

@@ -129,3 +129,43 @@ def test_mitre_coverage_matrix(spark):
     rows2 = mitre_coverage(spark, list(REFERENCE_RULES) + [extra]).collect()
     k2 = {(r["tactic"], r["technique"]): r for r in rows2}
     assert "untagged-probe" in k2[("(untagged)", "(untagged)")]["rules"]
+
+
+def _py4j_round_trips(spark, build) -> int:
+    """Driver->JVM round trips this thread makes while ``build()`` runs:
+    gateway ``send_command`` calls, minus memory commands (py4j sends those
+    when Python garbage-collects a JVM reference, so their number depends on
+    GC timing)."""
+    import threading
+
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    me = threading.get_ident()
+    n = 0
+
+    def counted(command, *a, **kw):
+        nonlocal n
+        if threading.get_ident() == me and not command.startswith(MEMORY_COMMAND_NAME):
+            n += 1
+        return orig(command, *a, **kw)
+
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        client.send_command = orig
+    return n
+
+
+def test_single_pass_build_cost_is_independent_of_rule_count(spark, sysmon_df):
+    """Deterministic driver-cost gauge: the match array and the metadata
+    array are each one ``F.expr`` of SQL text, so building the single-pass
+    plan costs the same py4j round trips for 5 rules as for 25."""
+    rules = active_rules()
+    assert len(rules) >= 25
+    apply_rules_single_pass(sysmon_df, rules)  # warm one-time lookups
+    five = _py4j_round_trips(spark, lambda: apply_rules_single_pass(sysmon_df, rules[:5]))
+    all_ = _py4j_round_trips(spark, lambda: apply_rules_single_pass(sysmon_df, rules))
+    assert five == all_, (five, all_)

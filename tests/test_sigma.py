@@ -3,6 +3,7 @@
 import base64
 
 import pytest
+from pyspark.sql import functions as F
 
 from dagger_spark.expr import Leaf, parse_predicate, to_sql
 from dagger_spark.rules.builtin import REFERENCE_RULES
@@ -446,12 +447,12 @@ def test_re_flag_modifiers_compile_to_inline_flags():
 
 def test_re_flag_case_insensitive_matches_end_to_end(spark):
     """(?i) survives the parse -> anchor -> rlike pipeline in both engines."""
-    from dagger_spark.expr import parse_predicate as pp, to_column, to_sql
+    from dagger_spark.expr import parse_predicate as pp, to_sql
     import duckdb
 
     pred = pp("`name` SIMILAR TO '(?i)ab.'")
     df = spark.createDataFrame([("ABC",), ("abd",), ("xbc",), (None,)], "name string")
-    got = sorted(r["name"] for r in df.filter(to_column(pred)).collect())
+    got = sorted(r["name"] for r in df.filter(F.expr(to_sql(pred, "spark"))).collect())
     assert got == ["ABC", "abd"]
     con = duckdb.connect()
     rows = con.execute(
@@ -469,12 +470,12 @@ def test_numeric_comparison_cross_engine_on_string_field(spark):
     import duckdb
     import pandas as pd
 
-    from dagger_spark.expr import parse_predicate as pp, to_column, to_sql
+    from dagger_spark.expr import parse_predicate as pp, to_sql
 
     pred = pp("`size` >= 100")
     rows = [("150",), ("99",), ("abc",), (None,), ("100",)]
     df = spark.createDataFrame(rows, "size string")
-    got = sorted(r["size"] for r in df.filter(to_column(pred)).collect())
+    got = sorted(r["size"] for r in df.filter(F.expr(to_sql(pred, "spark"))).collect())
     assert got == ["100", "150"]
 
     con = duckdb.connect()
@@ -504,12 +505,12 @@ def test_string_comparison_leaf_renders_lexically(spark):
     import duckdb
     import pandas as pd
 
-    from dagger_spark.expr import parse_predicate as pp, to_column, to_sql
+    from dagger_spark.expr import parse_predicate as pp, to_sql
 
     pred = pp("`day` > '2024-06-15'")
     rows = [("2024-06-14",), ("2024-06-15",), ("2024-07-01",), (None,)]
     df = spark.createDataFrame(rows, "day string")
-    got = sorted(r["day"] for r in df.filter(to_column(pred)).collect())
+    got = sorted(r["day"] for r in df.filter(F.expr(to_sql(pred, "spark"))).collect())
     assert got == ["2024-07-01"]
     con = duckdb.connect()
     con.register("t", pd.DataFrame(rows, columns=["day"]))
@@ -549,14 +550,10 @@ def test_fieldref_modifier_compares_columns():
 def test_fieldref_matches_rows_where_fields_equal(spark):
     """End-to-end: a fieldref rule fires exactly where the two event_data
     fields carry the same value."""
-    from pyspark.sql import functions as F
-
-    from dagger_spark.expr import parse_predicate, to_column
-
     spec = compile_sigma(
         mk({"sel": {"Image|fieldref": "ParentImage"}, "condition": "sel"})
     )
-    pred = to_column(parse_predicate(spec.predicate_sql))
+    pred = spec.condition()
     df = spark.createDataFrame(
         [(1, 1, ("same.exe", "same.exe")), (2, 1, ("a.exe", "b.exe")),
          (3, 1, (None, None)), (4, 10, ("same.exe", "same.exe"))],
