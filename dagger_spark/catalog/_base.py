@@ -19,6 +19,7 @@ __spark_entry__.py docstring).
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -41,7 +42,7 @@ from ..ops.text import (
     bpe_ish_token_count, doc_fingerprint, language_id, quality_score,
     text_stats, token_count, tokens, LANG_STOPWORDS,
 )
-from ..sources.files import load_table, load_tables
+from ..sources.files import ALL_TABLES, load_table, load_tables
 
 
 @dataclass(frozen=True)
@@ -80,10 +81,12 @@ def register(name: str, oracle: Optional[str], description: str = ""):
 
 def _shared_sql(name: str, sql: str, description: str = "", oracle_sql: Optional[str] = None):
     """Register a query whose Spark plan and DuckDB oracle share one ANSI SQL
-    text (dialect-portable by construction)."""
+    text (dialect-portable by construction).  Each request registers only
+    the tables the text names, matched as whole words, ignoring case."""
+    names = tuple(t for t in ALL_TABLES if re.search(rf"\b{t}\b", sql, re.I))
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_tables(spark, sf_dir)
+        load_tables(spark, sf_dir, names=names)
         return spark.sql(sql)
 
     QUERIES[name] = CatalogQuery(fn, oracle_sql or sql, description)

@@ -248,6 +248,10 @@ def _lit_sql(v: object, dialect: str) -> str:
     return str(v)
 
 
+def _is_number(v: object) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
 def to_sql(pred: Pred, dialect: str = "duckdb", case_insensitive: bool = False) -> str:
     """Render the IR as SQL text.
 
@@ -266,6 +270,23 @@ def to_sql(pred: Pred, dialect: str = "duckdb", case_insensitive: bool = False) 
             v = v.lower()
         return _lit_sql(v, dialect)
 
+    def numeric(p: Leaf, vals) -> tuple:
+        """(field, literal list) for a comparison with NUMERIC literals,
+        pinned ENGINE-AGNOSTICALLY: the field TRY_CASTs, so non-numeric
+        text is NULL and matches nothing.  Without it Spark would
+        implicitly coerce a string column (and ANSI mode THROWS on bad
+        input) while DuckDB refuses VARCHAR-vs-number outright.  Integer
+        literals compare in DECIMAL(38,9): exact for any int64 (DOUBLE
+        loses integers past 2^53) while matching fractional text like
+        '3.5' identically in both engines (BIGINT would diverge: DuckDB
+        rounds '3.5'->4, Spark yields NULL)."""
+        f = fld(p, False)
+        if all(isinstance(x, int) and not isinstance(x, bool) and abs(x) < 10 ** 29
+               for x in vals):
+            return f"TRY_CAST({f} AS DECIMAL(38,9))", ", ".join(str(x) for x in vals)
+        return (f"TRY_CAST({f} AS DOUBLE)",
+                ", ".join(_lit_sql(float(x), dialect) for x in vals))
+
     def go(p: Pred) -> str:
         if isinstance(p, And):
             return "(" + " AND ".join(go(c) for c in p.children) + ")"
@@ -278,36 +299,33 @@ def to_sql(pred: Pred, dialect: str = "duckdb", case_insensitive: bool = False) 
         lci = ci and not p.cased  # |cased leaves opt out of rule-wide CI
         low = lci and isinstance(v, str) and op in ("eq", "ne", "contains", "startswith", "endswith", "in")
         f = fld(p, low and op != "in")
-        if op == "eq":
-            return f"({f} = {lit(v, low)})"
-        if op == "ne":
-            return f"({f} <> {lit(v, low)})"
+        if op in ("eq", "ne", "lt", "le", "gt", "ge"):
+            sym = {"eq": "=", "ne": "<>", "lt": "<", "le": "<=", "gt": ">", "ge": ">="}[op]
+            # an ordering on a bool literal compares as 1.0/0.0
+            if _is_number(v) or (isinstance(v, bool) and op not in ("eq", "ne")):
+                num_f, num_v = numeric(p, [v])
+                return f"({num_f} {sym} {num_v})"
+            return f"({f} {sym} {lit(v, low)})"
         if op == "eq_field":
             a = fld(p, lci)
             b = _field_sql(v, dialect)
             return f"({a} = lower({b}))" if lci else f"({a} = {b})"
-        if op in ("lt", "le", "gt", "ge"):
-            # Numeric comparison semantics are pinned ENGINE-AGNOSTICALLY
-            # for NUMERIC literals: the field TRY_CASTs (NULL for
-            # non-numeric text -> no match).  Without it Spark would
-            # implicitly coerce a string column (and ANSI mode THROWS on
-            # bad input) while DuckDB refuses VARCHAR-vs-number outright.
-            # Integer literals compare in DECIMAL(38,9): exact for any
-            # int64 (DOUBLE loses integers past 2^53) while matching
-            # fractional text like '3.5' identically in both engines
-            # (BIGINT would diverge: DuckDB rounds '3.5'->4, Spark yields
-            # NULL).  STRING literals keep plain lexical comparison.
-            sym = {"lt": "<", "le": "<=", "gt": ">", "ge": ">="}[op]
-            if isinstance(v, str):
-                return f"({f} {sym} {lit(v, low)})"
-            if isinstance(v, int) and not isinstance(v, bool) and abs(v) < 10 ** 29:
-                return f"(TRY_CAST({f} AS DECIMAL(38,9)) {sym} {v})"
-            return f"(TRY_CAST({f} AS DOUBLE) {sym} {_lit_sql(float(v), dialect)})"
         if op == "in":
-            lower_all = lci and all(isinstance(x, str) for x in v)
-            f2 = fld(p, lower_all)
-            items = ", ".join(lit(x, lower_all) for x in v)
-            return f"({f2} IN ({items}))"
+            # one IN per literal kind: strings compare as text (lowered
+            # under CI), numbers through the same TRY_CAST as `=`, bools
+            # as they are
+            strs = [x for x in v if isinstance(x, str)]
+            nums = [x for x in v if _is_number(x)]
+            rest = [x for x in v if not isinstance(x, str) and not _is_number(x)]
+            parts = []
+            if strs:
+                parts.append(f"({fld(p, lci)} IN ({', '.join(lit(x, lci) for x in strs)}))")
+            if nums:
+                num_f, num_v = numeric(p, nums)
+                parts.append(f"({num_f} IN ({num_v}))")
+            if rest:
+                parts.append(f"({fld(p, False)} IN ({', '.join(lit(x, False) for x in rest)}))")
+            return parts[0] if len(parts) == 1 else "(" + " OR ".join(parts) + ")"
         if op == "is_null":
             return f"({f} IS NULL)"
         if op == "contains":

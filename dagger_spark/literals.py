@@ -71,13 +71,21 @@ def lit_double_array(values) -> Column:
     return F.expr(render_double_array(list(values)))
 
 
+def render_int_array(values) -> str:
+    if isinstance(values, (list, tuple)):
+        return "array(" + ",".join(render_int_array(v) for v in values) + ")"
+    v = int(values)
+    assert -(2**63) <= v < 2**63, "int64 range"
+    return str(v)
+
+
 def lit_int_array(values) -> Column:
-    """array<int> literal in one py4j call (same rationale as
-    :func:`lit_double_array`; int32 range asserted so the parsed element
-    type matches what per-element ``F.lit(int)`` produced)."""
-    vals = [int(v) for v in values]
-    assert all(-(2**31) <= v < 2**31 for v in vals), "int32 range"
-    return F.expr("array(" + ",".join(str(v) for v in vals) + ")")
+    """array<int> (arbitrarily nested) literal in one py4j call (same
+    rationale as :func:`lit_double_array`).  Each element parses to the type
+    per-element ``F.lit(int)`` gives it: INT inside the int32 range, BIGINT
+    beyond it (int64 range asserted), so a mixed list widens to
+    array<bigint> exactly as the element-wise construction does."""
+    return F.expr(render_int_array(list(values)))
 
 
 def lit_string_array(values) -> Column:

@@ -19,6 +19,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..literals import lit_int_array
 from .text import tokens
 
 
@@ -490,7 +491,7 @@ def simhash_votes(hashes: Column, bits: int = 32) -> Column:
     The naive per-bit formulation re-walks the token array ``bits`` times;
     this walks it once, zip-adding a 32-wide contribution vector per token
     — measured ~1.4× faster at identical vote sums."""
-    pw = F.lit([1 << p for p in range(bits)])
+    pw = lit_int_array([1 << p for p in range(bits)])
 
     def contrib(h: Column) -> Column:
         return F.transform(
@@ -526,7 +527,7 @@ def simhash_int_from_hashes(hashes: Column, bits: int = 32) -> Column:
     form is what pair verification wants: Hamming distance collapses to
     ``bit_count(a XOR b)`` and prefix blocking to a mask — no per-position
     string compares."""
-    pw = F.lit([1 << p for p in range(bits)])
+    pw = lit_int_array([1 << p for p in range(bits)])
     return F.aggregate(
         F.zip_with(
             simhash_votes(hashes, bits),

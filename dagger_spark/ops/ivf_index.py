@@ -92,7 +92,7 @@ from .manifest import (
     read_manifest,
     stream_watermark,
 )
-from ..literals import lit_double_array
+from ..literals import lit_double_array, lit_int_array
 from .similarity import (
     _cell_of_from_centroids,
     _centroid_literals,
@@ -489,8 +489,8 @@ def sq8_ivf_topk(
         # literal (split cells only); unsplit cells pass through
         keys = sorted(lm)
         expand = F.map_from_arrays(
-            F.lit(keys).cast("array<int>"),
-            F.lit([lm[c] for c in keys]).cast("array<array<int>>"),
+            lit_int_array(keys).cast("array<int>"),
+            lit_int_array([lm[c] for c in keys]).cast("array<array<int>>"),
         )
         q = q.withColumn(
             "cell",

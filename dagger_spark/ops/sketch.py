@@ -39,6 +39,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..literals import lit_int_array
+
 
 def hdr_bucket(v: F.Column, sub_bits: int = 5):
     """(shift, m) bucket expressions for a non-negative integer column."""
@@ -103,9 +105,7 @@ def hdr_quantiles(
         .withColumn("__n", F.sum("cnt").over(Window.partitionBy(*group_cols)))
         .withColumn("__est", est)
     )
-    qs = F.explode(
-        F.array(*[F.lit(int(p)) for p in q_pcts])
-    ).alias("q_pct")
+    qs = F.explode(lit_int_array(q_pcts)).alias("q_pct")
     ranked = cum.select(*group_cols, "__cum", "__n", "__est", qs).filter(
         # cum >= ceil(q*n/100)  <=>  100*cum >= q*n  (cum integral) —
         # pure integer comparison, no division anywhere

@@ -12,7 +12,18 @@ Local testing runs on ``local[N]`` but every default here is chosen for the
     cores) while AQE coalesces small post-shuffle partitions anyway;
   * parquet nanos-as-long: the driver testdata's ``events.ts`` is
     TIMESTAMP(NANOS), which vanilla Spark refuses to read; sources convert
-    the long back to a microsecond timestamp (see sources/files.py).
+    the long back to a microsecond timestamp (see sources/files.py);
+  * DataFrame call-site capture off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``): while it is on,
+    PySpark wraps every ``functions.*``/``Column`` call in an active-session
+    lookup, a conf read, a Python stack capture and a JVM origin set/clear —
+    ``F.col`` cost 13 py4j round trips instead of 3 and ``.alias`` 24
+    instead of 4, and that overhead was most of a catalog request's plan
+    construction.  What is lost is the PySpark file:line call site in a
+    DataFrame error's context; errors still carry their message and class,
+    and SQL-text contexts (``F.expr``, ``spark.sql``) still point into the
+    SQL text.  PySpark reads the flag once per process, from the first
+    session it sees.
 """
 
 from __future__ import annotations
@@ -48,6 +59,7 @@ def get_spark(
         .config("spark.sql.caseSensitive", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -1,12 +1,28 @@
 """Batch file sources for the driver's testdata tables and sysmon fixtures.
 
-Scale notes: these are plain ``spark.read.parquet`` scans so Catalyst predicate
-pushdown / column pruning / partition pruning apply untouched.  The one
-wrinkle is ``events.ts``: the driver writes parquet TIMESTAMP(NANOS), which
-Spark refuses outright (PARQUET_TYPE_ILLEGAL).  With
-``spark.sql.legacy.parquet.nanosAsLong=true`` (set in session.py) the column
-arrives as a BIGINT of epoch-nanos; we convert to a microsecond TIMESTAMP
-here.  DuckDB (the oracle) truncates ns->us identically.
+Tables are plain parquet scans, so Catalyst predicate pushdown, column
+pruning and partition pruning apply untouched.  What ``load_table`` adds is
+a pinned schema: ``spark.read.parquet`` without a schema runs a Spark job
+(``mergeSchemasInParallel``) to read the footers, even for one file, and
+that job used to be most of a short catalog request's fixed cost.  The
+first read of a parquet FILE keeps the ``StructType`` Spark inferred, under
+the file's ``(realpath, st_ino, st_size, st_mtime_ns, st_ctime_ns)``; a
+later read of the same, unchanged file passes it to
+``spark.read.schema(...)`` and launches no job.  Only metadata is cached,
+never data, and one entry is kept per path, so a rewritten file (new
+stat) is inferred again and never gets a stale schema.  The cache is
+process-wide and not keyed on a session: a ``StructType`` does not depend
+on the session that inferred it, provided sessions agree on the parquet
+type-mapping confs (all sessions here come from ``session.get_spark``).
+A directory path keeps inference on every read.
+
+The one wrinkle is ``events.ts``: the driver writes parquet
+TIMESTAMP(NANOS), which Spark refuses outright (PARQUET_TYPE_ILLEGAL).
+With ``spark.sql.legacy.parquet.nanosAsLong=true`` (set in session.py, and
+again here for sessions built elsewhere) the column arrives as a BIGINT of
+epoch-nanos, and the pinned schema keeps it a BIGINT; we convert to a
+microsecond TIMESTAMP here.  DuckDB (the oracle) truncates ns->us
+identically.
 """
 
 from __future__ import annotations
@@ -22,18 +38,42 @@ from ..schemas import SYSMON_EVENT_SCHEMA
 TPCH_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
 
+# realpath -> (stat stamp, StructType) of the parquet file's last read
+_SCHEMAS: dict = {}
+
+
+def _stamp(path: str):
+    st = os.stat(path)
+    return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple:
+    """``(spark.read.parquet(path), its schema)``, inferring a file's schema
+    only on its first read or after the file changed (see the module
+    docstring)."""
+    if not os.path.isfile(path):
+        df = spark.read.parquet(path)
+        return df, df.schema
+    real = os.path.realpath(path)
+    stamp = _stamp(real)
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    # a rewrite racing the inference must not pin what it read
+    if _stamp(real) == stamp:
+        _SCHEMAS[real] = (stamp, schema)
+    return df, schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        # defensively enable the nanos workaround — the driver may hand us a
-        # session built without it (it is a runtime-settable SQL conf)
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+        # the caller may hand us a session built without the nanos
+        # workaround (it is a runtime-settable SQL conf)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df, schema = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
         # integer DIV, not `/`: epoch-nanos ~1.7e18 exceeds double's 53-bit
         # mantissa, so float division can bump the microsecond by one —
         # DuckDB (the oracle) truncates exactly

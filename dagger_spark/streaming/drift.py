@@ -41,6 +41,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..literals import lit_double_array
+
 
 def bucket_of(value: Column, cuts: Sequence[float]) -> Column:
     """Bucket index 0..len(cuts) for ``value`` against ascending literal
@@ -49,7 +51,7 @@ def bucket_of(value: Column, cuts: Sequence[float]) -> Column:
     contains 0.0, which is bucket 0 only when all cuts are positive.
     Callers filter NULLs out first if they mean 'missing' rather than
     'zero'."""
-    lit_cuts = F.array(*[F.lit(float(c)) for c in cuts])
+    lit_cuts = lit_double_array(cuts)
     return F.size(
         F.filter(lit_cuts, lambda c: F.coalesce(value, F.lit(0.0)) >= c)
     ).cast("int")
@@ -81,7 +83,7 @@ def psi_drift_stream(
             f"got {len(ref_counts)}"
         )
     r_tot = float(sum(ref_counts))
-    lit_refs = F.array(*[F.lit(float(r)) for r in ref_counts])
+    lit_refs = lit_double_array(ref_counts)
 
     src = events
     if src.isStreaming and watermark:

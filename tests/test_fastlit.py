@@ -14,6 +14,7 @@ directly.
 """
 
 import math
+import re
 import struct
 
 from pyspark.sql import functions as F
@@ -80,6 +81,23 @@ def test_int_array_type_and_value_parity(spark):
     fast, slow = _both(spark, lit_int_array(vals), vals)
     assert str(fast.schema) == str(slow.schema)  # array<int>, not bigint
     assert list(fast.head()["v"]) == list(slow.head()["v"]) == vals
+
+
+def _plan(df) -> str:
+    """Optimized plan text without expression ids."""
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_int_array_past_int32_and_nested_match_element_wise(spark):
+    """Elements past int32 parse as BIGINT, as per-element ``F.lit`` makes
+    them, so the simhash bit-weight vector (up to 2^31) widens to
+    array<bigint> either way; nested lists (the IVF leaf map) keep their
+    shape.  Same schema, values and plan."""
+    for vals in ([1 << p for p in range(32)], [[10, 11], [12, 13, 2**40]], [-5, 2**31]):
+        fast, slow = _both(spark, lit_int_array(vals), vals)
+        assert str(fast.schema) == str(slow.schema)
+        assert fast.head()["v"] == slow.head()["v"] == vals
+        assert _plan(fast) == _plan(slow)
 
 
 def test_string_array_escape_round_trip(spark):

@@ -5,6 +5,7 @@ DuckDB through the two ``to_sql`` dialects.  This is the generic form of the per
 SURVEY.md §5.5."""
 
 import duckdb
+import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -20,11 +21,13 @@ VALUES = [
 ]
 REGEXES = ["^a", "c$", "a.c", "[0-9]+", "^(?:abc|ABC)$", "x{2,3}", "\\|", "^$"]
 FIELDS = ["a", "b"]
-# numeric-ish text the lt/le/gt/ge TRY_CAST path must treat identically in
-# both engines: fractional, whitespace-padded, scientific, past-2^53, junk
+# numeric-ish text the TRY_CAST path of numeric literals must treat
+# identically in both engines: fractional, whitespace-padded, scientific,
+# past-2^53, junk
 NUM_TEXT = ["3.5", "42", "-7", " 7 ", "1e10", "9007199254740993",
-            "9007199254740992", "0", "abc", "", "nan"]
-NUM_LITS = [0, 3, 4, -1, 2 ** 53, 2 ** 53 + 1, 2 ** 63, 10 ** 28, 3.5, 0.1, -2.0]
+            "9007199254740992", "0", "abc", "", "nan", "443", "443.0"]
+NUM_LITS = [0, 3, 4, -1, 2 ** 53, 2 ** 53 + 1, 2 ** 63, 10 ** 28, 3.5, 0.1, -2.0,
+            443, 443.0]
 
 leaf_st = st.one_of(
     st.builds(Leaf, st.sampled_from(FIELDS), st.just("eq"), st.sampled_from(VALUES)),
@@ -40,8 +43,12 @@ leaf_st = st.one_of(
               st.lists(st.sampled_from(VALUES), min_size=1, max_size=4).map(tuple)),
     st.builds(Leaf, st.sampled_from(FIELDS), st.just("is_null"), st.none()),
     st.builds(Leaf, st.sampled_from(FIELDS),
-              st.sampled_from(["lt", "le", "gt", "ge"]),
+              st.sampled_from(["eq", "ne", "lt", "le", "gt", "ge"]),
               st.sampled_from(NUM_LITS)),
+    # numeric and mixed string/number IN lists
+    st.builds(Leaf, st.sampled_from(FIELDS), st.just("in"),
+              st.lists(st.sampled_from(NUM_LITS + VALUES[:4]), min_size=1,
+                       max_size=4).map(tuple)),
 )
 
 pred_st = st.recursive(
@@ -92,3 +99,30 @@ def test_case_insensitive_render_agrees(prop_data, pred):
     sql = to_sql(pred, "duckdb", case_insensitive=True)
     want = {r[0] for r in con.execute(f"SELECT id FROM t WHERE {sql}").fetchall()}
     assert got == want, f"pred={pred}\nsql={sql}"
+
+
+NUMERIC_ON_TEXT = ["443", "443.0", "abc", None]
+
+
+@pytest.mark.parametrize("leaf, want", [
+    (Leaf("a", "eq", 443), {"443", "443.0"}),
+    (Leaf("a", "eq", 443.0), {"443", "443.0"}),
+    (Leaf("a", "ne", 443), set()),
+    (Leaf("a", "ne", 80), {"443", "443.0"}),
+    (Leaf("a", "in", (80, 443)), {"443", "443.0"}),
+    (Leaf("a", "in", (80.5, 443)), {"443", "443.0"}),
+    (Leaf("a", "in", ("abc", 443)), {"443", "443.0", "abc"}),
+    (Not(Leaf("a", "in", ("abc", 80))), {"443", "443.0"}),
+])
+def test_numeric_literal_on_text_field_does_not_raise(spark, leaf, want):
+    """A numeric ``=``/``<>``/``IN`` over a string field TRY_CASTs the field:
+    non-numeric text matches nothing instead of failing the query with an
+    ANSI ``CAST_INVALID_INPUT`` (Spark) or a conversion error (DuckDB)."""
+    df = spark.createDataFrame([(x,) for x in NUMERIC_ON_TEXT], "a string")
+    got = {r.a for r in df.filter(F.expr(to_sql(leaf, "spark"))).collect()}
+    con = duckdb.connect()
+    t = pd.DataFrame({"a": pd.Series(NUMERIC_ON_TEXT, dtype=object)})
+    con.register("t", t)
+    sql = to_sql(leaf, "duckdb")
+    duck = {r[0] for r in con.execute(f"SELECT a FROM t WHERE {sql}").fetchall()}
+    assert got == duck == want, (sql, got, duck)

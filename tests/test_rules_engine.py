@@ -169,3 +169,14 @@ def test_single_pass_build_cost_is_independent_of_rule_count(spark, sysmon_df):
     five = _py4j_round_trips(spark, lambda: apply_rules_single_pass(sysmon_df, rules[:5]))
     all_ = _py4j_round_trips(spark, lambda: apply_rules_single_pass(sysmon_df, rules))
     assert five == all_, (five, all_)
+    assert all_ <= 150, all_
+
+
+def test_session_turns_off_call_site_capture(spark):
+    """``get_spark`` turns PySpark's DataFrame call-site capture off, so a
+    ``functions``/``Column`` call is its own JVM call plus a few, not a
+    stack capture and origin set/clear around each one."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    F.col("a").alias("b")  # warm one-time lookups
+    n = _py4j_round_trips(spark, lambda: F.col("a").alias("b"))
+    assert n <= 8, n
